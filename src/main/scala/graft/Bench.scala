@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query at the given sf, one JSON
   * line on stdout.
@@ -9,24 +8,26 @@ import org.apache.spark.sql.SparkSession
   *    (a bare count() lets Catalyst prune aggregates/sorts);
   *  - one warmup query first so JIT/classloading/FileSystem init is not
   *    billed to whichever query happens to run first;
-  *  - queries run in sorted name order for stable cross-round comparisons.
+  *  - queries run in sorted name order for stable cross-round comparisons;
+  *  - a query that throws is listed by name under `failed` and kept out
+  *    of `value` and `queries` — a failure never counts as a time.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    val cpus = spark.sparkContext.defaultParallelism
 
-    def drain(name: String): Double = {
+    /** Wall seconds of one full drain, or None when the query throws. */
+    def drain(name: String): Option[Double] = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
       }
-      (System.nanoTime() - t0) / 1e9
     }
 
     // Load sentinel (r7 VERDICT What's-wrong #4): two rounds lost grades to
@@ -91,12 +92,13 @@ object Bench {
     val probePre = probe2()
     val cpu0 = procCpuSec
     val wall0 = System.nanoTime()
-    // same -1.0-sentinel guard as the healing pass: a failed steady-state
-    // rerun must not clobber the valid first measurement
+    // a failed steady-state rerun must not clobber the valid first
+    // measurement: keep the min over the drains that returned a time
+    def minOf(a: Option[Double], b: Option[Double]): Option[Double] =
+      (a ++ b).minOption
     val results = names.map { n =>
       val t1 = drain(n)
-      n -> (if (t1 > 1.0) { val d = drain(n); if (d >= 0) math.min(t1, d) else t1 }
-        else t1)
+      n -> (if (t1.exists(_ > 1.0)) minOf(t1, drain(n)) else t1)
     }
     val wallSec = (System.nanoTime() - wall0) / 1e9
     val cpuSec = if (cpu0 < 0) -1.0 else procCpuSec - cpu0
@@ -125,11 +127,11 @@ object Bench {
     val loadDirty =
       probePost > DirtyFactor * math.min(probeFloor, probePre) ||
       probePre > DirtyFactor * probeFloor ||
-      lavgStart > cpus.toInt / 4.0
+      lavgStart > cpus / 4.0
     // nRequeried counts only re-drains that RETURNED a time (r10 ADVICE:
     // counting attempts overstated the healing when a re-drain failed
-    // with the -1.0 sentinel and kept the original number); failures are
-    // reported separately so the artifact is honest about both.
+    // and kept the original number); failures are reported separately
+    // so the artifact is honest about both.
     var nRequeried = 0
     // failed re-drains carry their NAMES into the JSON (r11 VERDICT #8:
     // an anonymous n_requery_failed can't be told apart from a broken
@@ -138,20 +140,20 @@ object Bench {
     val healed =
       if (!loadDirty) results
       else results.map { case (n, t) =>
-        // a FAILED re-drain (-1.0 sentinel) must not clobber the valid
-        // billed measurement — keep the original time on error; and a
-        // SUCCESSFUL re-drain of a query whose billed run failed must
-        // replace the -1.0, not min() under it
+        // a FAILED re-drain must not clobber the valid billed measurement,
+        // and a SUCCESSFUL re-drain of a query whose billed run failed
+        // supplies its time
         val d = drain(n)
-        if (d >= 0) { nRequeried += 1
-          n -> (if (t < 0) d else math.min(t, d)) }
-        else { requeryFailed += n; n -> t }
+        if (d.isDefined) nRequeried += 1 else requeryFailed += n
+        n -> minOf(t, d)
       }
     // Millisecond precision keeps the JSON compact; the total is computed
     // from the ALREADY-ROUNDED per-query values so the line is internally
-    // consistent (value == Σ queries exactly — r6 ADVICE).
+    // consistent (value == Σ queries exactly — r6 ADVICE). Failed queries
+    // carry no time: they are named under `failed`, never summed.
     def ms(v: Double): Double = math.rint(v * 1000) / 1000
-    val rounded = healed.map { case (k, v) => k -> ms(v) }
+    val rounded = healed.collect { case (k, Some(v)) => k -> ms(v) }
+    val failed = healed.collect { case (k, None) => k }
     val total = ms(rounded.map(_._2).sum)
     // r15 verdict #5: the probe FLOOR, not load_dirty, classifies a run
     // as representative — two r15 runs flagged clean carried degraded
@@ -162,7 +164,7 @@ object Bench {
     // The band was measured at 32 cores; the probe is embarrassingly
     // parallel, so the bound scales inversely with the core count the
     // driver chose for this run.
-    val floorBandMax = math.rint(100.0 * 4.8 / cpus.toInt) / 100
+    val floorBandMax = math.rint(100.0 * 4.8 / cpus) / 100
     val floorVerdict = if (probeFloor <= floorBandMax) "healthy" else "degraded"
     val loadJson =
       s""","load":{"probe_floor":${ms(probeFloor)},""" +
@@ -176,11 +178,13 @@ object Bench {
         s""""n_requery_failed":${requeryFailed.size},""" +
         requeryFailed.map("\"" + _ + "\"")
           .mkString(""""requery_failed":[""", ",", "]}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def render(entries: Seq[(String, Double)], extra: String): String = {
       val qs = entries.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""sf":"$sfDir","n_queries":${rounded.size}$loadJson$extra}"""
+        s""""sf":"$sfDir","n_queries":${rounded.size},"failed":$failedJson""" +
+        s"""$loadJson$extra}"""
     }
     // The FULL per-query map always lands in a file (a truncated stdout
     // capture can never lose the numbers)…

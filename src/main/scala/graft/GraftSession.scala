@@ -55,8 +55,11 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for tests/benchmarks. */
-  def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Local session for tests and the driver mains (`Bench`, `Verify`,
+    * `PlanDump`). The core count defaults to `SPARK_GRAFT_CPUS` — the one
+    * place that variable is read — and then to every available core. */
+  def local(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val spark = tune(
       SparkSession.builder().master(s"local[$cpus]").appName("graft"),
       shufflePartitions = cpus

@@ -891,8 +891,9 @@ object Pipeline {
     * stream twin and the oracle (four classes: exact copies, near-dup
     * variants, clean reversals, contaminated embeddings). Precondition:
     * source ids < 1e8 — the classes are spread 1e8 apart, so a wider
-    * source id space would alias one class onto another (the ScaleProbe
-    * feed re-densifies its replicated ids for exactly this reason). */
+    * source id space would alias one class onto another (tools/replicate.py
+    * maps replicated ids as id·N + r and refuses any id that reaches 1e8
+    * for exactly this reason). */
   def admissionBatchOn(d: DataFrame): DataFrame = {
     import graft.operators.CorpusOps.{BenchmarkMod, ContaminatedShift}
     val toks = split(trim(col("text")), "\\s+")

@@ -110,9 +110,9 @@ object SaIndex {
     graft.GraftSession.unpersistLocalCheckpoint(cur)
   }
 
-  /** Probe/bench hook: build a window-group index for an ARBITRARY doc
-    * frame directly into `root` (no corpus-dir fingerprinting or memo) —
-    * ScaleProbe's 24× build/probe split drives it. */
+  /** Build a window-group index for an ARBITRARY doc frame directly into
+    * `root` (no corpus-dir fingerprinting or memo) — the index-layout
+    * specs (IndexFsSpec) drive it. */
   private[graft] def buildWindowSegment(docs: DataFrame, idCol: String,
       textCol: String, w: Int, root: String): Unit =
     writeSegment(docs, idCol, textCol, w, root, "")

@@ -362,28 +362,13 @@ object StatefulSessions {
       } else Iterator.empty
   }
 
-  /** transformWithState REQUIRES the RocksDB state store — a dedicated
-    * child session carries that provider so the HDFS-backed default on
-    * every other streaming query is untouched. */
-  private val rocksSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]()
-  private def rocksSession(root: SparkSession): SparkSession =
-    rocksSessions.synchronized {
-      var s = rocksSessions.get(root)
-      if (s == null) {
-        s = root.newSession()
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        rocksSessions.put(root, s)
-      }
-      s.conf.set("spark.sql.shuffle.partitions",
-        root.conf.getOption("graft.streaming.statePartitions").getOrElse("8"))
-      s
-    }
-
   def streamSessionsTws(rootSpark: SparkSession, dir: String): DataFrame = {
-    val spark = rocksSession(rootSpark)
+    // transformWithState REQUIRES the RocksDB state store — its own child
+    // session carries that provider so the HDFS-backed default on every
+    // other streaming query is untouched
+    val spark = StreamOps.childSession(rootSpark,
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
     val (maxTsUs, realCount) = eventStats(spark, dir)

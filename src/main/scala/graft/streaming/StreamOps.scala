@@ -34,22 +34,31 @@ object StreamOps {
     * The sizing lives in a dedicated child session (isolated conf over the
     * shared SparkContext) so concurrent BATCH queries on the caller's
     * session never see the streaming partition count — streaming DAGs must
-    * be BUILT on this session for its conf to apply. One child per root
-    * session, weakly keyed so cycled sessions can be collected. */
-  private val streamingSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]()
-
+    * be BUILT on this session for its conf to apply. */
   def streamingSession(spark: SparkSession): SparkSession =
-    streamingSessions.synchronized {
-      var s = streamingSessions.get(spark)
-      if (s == null) {
-        s = spark.newSession()
-        streamingSessions.put(spark, s)
-      }
-      // re-read on every call: a conf change on the root session must apply
-      // to the NEXT streaming query, not be frozen at child-session birth
+    childSession(spark, Map.empty)
+
+  private val childSessions = new java.util.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[Map[String, String], SparkSession]]()
+
+  /** The one child-session mechanism behind every streaming query: one
+    * child per (root session, `fixed` confs), weakly keyed on the root so
+    * cycled sessions can be collected. `fixed` is set once at birth (e.g.
+    * the RocksDB state store for transformWithState); the state-partition
+    * count is re-read on every call, so a conf change on the root applies
+    * to the NEXT streaming query instead of freezing at child birth. */
+  private[streaming] def childSession(root: SparkSession,
+      fixed: Map[String, String]): SparkSession =
+    childSessions.synchronized {
+      val s = childSessions
+        .computeIfAbsent(root, _ => scala.collection.mutable.Map.empty)
+        .getOrElseUpdate(fixed, {
+          val c = root.newSession()
+          fixed.foreach { case (k, v) => c.conf.set(k, v) }
+          c
+        })
       s.conf.set("spark.sql.shuffle.partitions",
-        spark.conf.getOption("graft.streaming.statePartitions").getOrElse("8"))
+        root.conf.getOption("graft.streaming.statePartitions").getOrElse("8"))
       s
     }
 

@@ -9,7 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, MapType, StructType}
   *    (ANN / embedding pairs / multimodal features);
   *  - every ORACLE-CHECKED query emits only atomic columns — the driver's
   *    comparator orders rows with pandas, which cannot sort array/struct
-  *    cells (the round-1 etl_receipts_nested failure mode).
+  *    cells (the round-1 etl_receipts_nested failure mode);
+  *  - the library ships no dev harness: the only mains are the driver
+  *    entry points.
   */
 class PlanGuardSpec extends SparkSpec {
 
@@ -318,5 +320,19 @@ class PlanGuardSpec extends SparkSpec {
         }
       }
     assert(offenders.isEmpty, s"non-atomic oracle columns: $offenders")
+  }
+
+  test("no main under src/main except Bench, Verify and PlanDump") {
+    // dev scaffolding (probes, ledgers, audits) lives outside the library;
+    // scale runs use the real keys on a tools/replicate.py data dir
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val mains = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => """\bdef\s+main\s*\(""".r.findFirstIn(
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    finally walk.close()
+    assert(mains === Set("Bench", "Verify", "PlanDump"))
   }
 }

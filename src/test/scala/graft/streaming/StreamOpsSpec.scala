@@ -15,6 +15,17 @@ class StreamOpsSpec extends SparkSpec with WaveStaging {
     assert(StreamOps.streamingSession(spark).conf.get(key) === "8")
     // the child is cached per root session, not re-created per query
     assert(StreamOps.streamingSession(spark) eq StreamOps.streamingSession(spark))
+    // the transformWithState child's RocksDB provider stays on that child
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = Map(provider ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val tws = StreamOps.childSession(spark, rocks)
+    assert(!(tws eq StreamOps.streamingSession(spark)))
+    assert(tws eq StreamOps.childSession(spark, rocks))
+    assert(tws.conf.get(provider) === rocks(provider))
+    assert(tws.conf.get(key) === "8")
+    assert(StreamOps.streamingSession(spark).conf.get(provider) ===
+      spark.conf.get(provider))
   }
 
   test("streamed windowed agg equals the batch windowed agg") {
