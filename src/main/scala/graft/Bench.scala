@@ -35,9 +35,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // sampled at entry, before OUR warmup inflates the 1-min average:
-    // this is the host's run queue as the bench found it, the signal for
-    // persistent (whole-run) contamination that flat pre/post probes
-    // cannot see
+    // the host's run queue as the bench found it, kept as provenance (the
+    // probe floor's verdict, not loadavg, classifies the run)
     val lavgStart = loadavg
     val spark = GraftSession.local()
     val sc = spark.sparkContext
@@ -163,8 +162,7 @@ object Bench {
     // a stopped context leaves no probe to compare and nothing to re-drain
     val loadDirty = (probeFloor, probePre, probePost) match {
       case (Some(floor), Some(pre), Some(post)) if alive() =>
-        post > DirtyFactor * math.min(floor, pre) || pre > DirtyFactor * floor ||
-          lavgStart > cpus / 4.0
+        post > DirtyFactor * math.min(floor, pre) || pre > DirtyFactor * floor
       case _ => false
     }
     // nRequeried counts only re-drains that RETURNED a time (r10 ADVICE:

@@ -1297,7 +1297,7 @@ object VectorOps {
 
   def embeddingQuantize(spark: SparkSession, dir: String): DataFrame =
     embeddingQuantizeOn(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding")
+      Tables(spark, dir).embeddings, "vec_id", "embedding")
 
   val embeddingQuantizeSql: String =
     s"""WITH $embSql,

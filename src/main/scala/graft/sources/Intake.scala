@@ -29,7 +29,7 @@ object Intake {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val path = Paths.get(sys.props("java.io.tmpdir"), s"graft_intake_$tag.csv")
     if (!Files.exists(path)) {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables(spark, dir).documents
         .select("doc_id", "text", "n_chars")
         .orderBy("doc_id").limit(100).collect()
       val sb = new StringBuilder("Doc Id,Text Content,N Chars\n")

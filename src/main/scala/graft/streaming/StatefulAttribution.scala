@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.sources.Tables
 
 /** B42's last-touch attribution as a LIVE stream: per-user state is the
   * single most-recent click (16 bytes), purchases emit their credit the
@@ -55,17 +56,10 @@ object StatefulAttribution {
   val QueryName = "graft_stream_attribution"
 
   def attributionStream(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
+      glob: String = Tables.file("events"),
       sourceOptions: Map[String, String] = Map.empty): Dataset[AttrOut] = {
     import spark.implicits._
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).options(sourceOptions).parquet(dir)
-    val withTs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    val evs: Dataset[Ev] = withTs
+    val evs: Dataset[Ev] = Tables.stream(spark, dir, glob, sourceOptions)
       .withWatermark("ts", "1 second")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.sources.Tables
 
 /** Custom-state Structured Streaming: gap-based sessionization with
   * `flatMapGroupsWithState` — the streaming twin of
@@ -83,14 +84,8 @@ object StatefulSessions {
     * micro-batch each). */
   private[graft] def rawEvents(spark: SparkSession, dir: String, glob: String,
       sourceOptions: Map[String, String] = Map.empty): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).options(sourceOptions).parquet(dir)
-    val withTs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    withTs.select(col("user_id"), col("event_id"), col("value"), col("ts"))
+    Tables.stream(spark, dir, glob, sourceOptions)
+      .select(col("user_id"), col("event_id"), col("value"), col("ts"))
   }
 
   /** The sessionizer DAG over a streaming event source — shared by the
@@ -99,7 +94,7 @@ object StatefulSessions {
     * unions a second streaming source (the driver query's watermark
     * sentinel). */
   def sessionsStream(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
+      glob: String = Tables.file("events"),
       extra: Option[DataFrame] = None,
       sourceOptions: Map[String, String] = Map.empty): Dataset[SessionOut] = {
     import spark.implicits._
@@ -213,18 +208,12 @@ object StatefulSessions {
     * (which feeds time-ordered waves via `sourceOptions`). `extra` unions
     * the watermark sentinel. */
   def scd2Stream(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
+      glob: String = Tables.file("events"),
       extra: Option[DataFrame] = None,
       sourceOptions: Map[String, String] = Map.empty): Dataset[Scd2Out] = {
     import spark.implicits._
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).options(sourceOptions).parquet(dir)
-    val base =
-      (if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw)
-        .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
+    val base = Tables.stream(spark, dir, glob, sourceOptions)
+      .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
     extra.fold(base)(base.unionByName(_))
       .withWatermark("ts", "1 second")
       .select(col("user_id"), col("event_id"),
@@ -278,7 +267,7 @@ object StatefulSessions {
   def streamSessionsNative(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = StreamOps.streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
-    val ev = rawEvents(spark, dir, "events.parquet").unionByName(
+    val ev = rawEvents(spark, dir, Tables.file("events")).unionByName(
       rawEvents(spark, sentinelDir(spark, dir, maxTsUs), "*.parquet"))
     val agg = ev
       .withWatermark("ts", "1 second")
@@ -372,7 +361,7 @@ object StatefulSessions {
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
     val (maxTsUs, realCount) = eventStats(spark, dir)
-    val base = rawEvents(spark, dir, "events.parquet").unionByName(
+    val base = rawEvents(spark, dir, Tables.file("events")).unionByName(
       rawEvents(spark, sentinelDir(spark, dir, maxTsUs), "*.parquet"))
     val evs: Dataset[Ev] = base
       .withWatermark("ts", "1 second")

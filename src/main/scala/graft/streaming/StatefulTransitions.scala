@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.sources.Tables
 
 /** B34's event-transition matrix as a LIVE stream: the batch operator's
   * per-user `lag` window becomes per-user state holding the SINGLE last
@@ -57,17 +58,10 @@ object StatefulTransitions {
   val QueryName = "graft_stream_transitions"
 
   def transitionsStream(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
+      glob: String = Tables.file("events"),
       sourceOptions: Map[String, String] = Map.empty): Dataset[Edge] = {
     import spark.implicits._
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).options(sourceOptions).parquet(dir)
-    val withTs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    val evs: Dataset[Ev] = withTs
+    val evs: Dataset[Ev] = Tables.stream(spark, dir, glob, sourceOptions)
       .withWatermark("ts", "1 second")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"), col("ts"))

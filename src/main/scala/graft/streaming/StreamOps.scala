@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.operators.Olap.dsum
+import graft.sources.Tables
 
 /** SURVEY §2 B14: Structured Streaming analogue of the reference's stream-out
   * path (stream/util.py): event-time windowed aggregation with a watermark,
@@ -72,16 +73,8 @@ object StreamOps {
 
   def streamEvents(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark) // isolated state-partition conf
-    // schema from a batch peek (ts arrives as LONG nanos, see GraftSession)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val ev =
-      (if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw)
-        .select(col("ts"), col("event_type"), col("value"))
+    val ev = Tables(spark, dir).stream("events")
+      .select(col("ts"), col("event_type"), col("value"))
     // APPEND mode, not complete: complete-mode re-delivers the ENTIRE
     // window history every micro-batch, and the result table is O(windows
     // × types) — it grows with the corpus's time span, so on a year-long
@@ -92,8 +85,7 @@ object StreamOps {
     // finalizes ALL of them and still equals the batch aggregation.
     val (maxTsUs, realCount) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, EventsSentinelOffsetUs)
-    val sentinel = spark.readStream
-      .schema(spark.read.parquet(sdir).schema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
     val agg = ev.unionByName(sentinel)
       .withWatermark("ts", "1 hour")
@@ -134,15 +126,9 @@ object StreamOps {
     * the batch interval join, so this is oracle-checked. */
   def streamJoin(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark) // isolated state-partition conf
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // ONE streaming source, self-joined: both sides reuse the same scan
     // (and the event_type filters prune each side's state)
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val ev =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
+    val ev = Tables(spark, dir).stream("events")
     def side(tag: String, typ: String) =
       ev.filter(col("event_type") === typ)
         .withWatermark("ts", "1 hour")
@@ -194,9 +180,9 @@ object StreamOps {
     * parquet sink, not the memory sink. */
   def streamDedup(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark) // isolated state-partition conf
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    def src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val t = Tables(spark, dir)
+    val schema = t.documents.schema
+    def src = t.stream("documents", schema = Some(schema))
       .select(col("doc_id"), col("text"))
     val stream = src.unionByName(
       src.filter(col("doc_id") % 7 === 0)
@@ -226,9 +212,7 @@ object StreamOps {
     * corpus. */
   def streamQualityGate(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark) // isolated state-partition conf
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents")
     val agg = graft.operators.Pipeline.qualityFlagsOn(docs)
       .groupBy(col("reject_reason"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_words"))
@@ -248,16 +232,6 @@ object StreamOps {
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
   // --- B32/B33: batch cores run incrementally, unchanged --------------------
-  /** Shared streaming events source (LONG-nanos ts converted like Tables). */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else raw
-  }
-
   private def drainComplete(spark: SparkSession, df: DataFrame,
       name: String): DataFrame = {
     spark.streams.active.filter(_.name == name).foreach(_.stop())
@@ -404,11 +378,8 @@ object StreamOps {
   /** (max event-time micros, row count) of the real event source — one tiny
     * agg over the parquet footprint, recomputed per call by design. */
   private[graft] def eventStats(spark: SparkSession, dir: String): (Long, Long) = {
-    val ev = spark.read.option("pathGlobFilter", "events.parquet").parquet(dir)
-    val r = // epoch micros regardless of the source's ts physical type
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        ev.agg(max(expr("ts div 1000")), count(lit(1))).head()
-      else ev.agg(max(unix_micros(col("ts"))), count(lit(1))).head()
+    val r = Tables(spark, dir).events
+      .agg(max(unix_micros(col("ts"))), count(lit(1))).head()
     (r.getLong(0), r.getLong(1))
   }
 
@@ -443,7 +414,8 @@ object StreamOps {
     * not a rewrite. */
   def streamFunnel(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val ev = eventsStream(spark, dir).withColumn("ts_us", unix_micros(col("ts")))
+    val ev = Tables(spark, dir).stream("events")
+      .withColumn("ts_us", unix_micros(col("ts")))
     val agg = graft.operators.OlapC.funnelOn(ev, "user_id", "ts_us",
       "event_type", Seq("view", "click", "purchase"))
     // One row per user = O(corpus): parquet-sink drain, not the memory sink.
@@ -462,7 +434,7 @@ object StreamOps {
   def streamMv(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
     val agg = graft.operators.OlapC.mvDailyAggOn(
-      eventsStream(spark, dir), "ts", "event_type", "value")
+      Tables(spark, dir).stream("events"), "ts", "event_type", "value")
     drainComplete(spark, agg, MvQueryName)
       .select(col("day"), col("event_type"), col("n"),
         col("_vsum").cast("double").as("value_sum"), col("value_max"))
@@ -480,7 +452,7 @@ object StreamOps {
     * DuckDB oracle. */
   def streamTopk(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val counts = eventsStream(spark, dir)
+    val counts = Tables(spark, dir).stream("events")
       .select(to_date(col("ts")).as("day"), col("user_id").as("k"))
       .groupBy(col("day"), col("k")).agg(count(lit(1)).as("n"))
     // (day, key) counts grow with distinct keys = O(corpus): parquet sink.
@@ -514,10 +486,8 @@ object StreamOps {
       literalMax: Long): DataFrame = {
     val spark = streamingSession(rootSpark)
     val t = graft.operators.CorpusOps.knTrainTablesOn(
-      spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      Tables(spark, dir).documents, "doc_id", "text")
+    val docs = Tables(spark, dir).stream("documents")
     if (t.dTypes <= literalMax) {
       // literal-path scoring is stateless append over O(docs) output rows —
       // corpus-sized, so it drains through the parquet sink like the join
@@ -567,14 +537,14 @@ object StreamOps {
       literalMax: Long): DataFrame = {
     import graft.operators.CorpusOps
     val spark = streamingSession(rootSpark)
-    val static = spark.read.parquet(s"$dir/documents.parquet")
+    val static = Tables(spark, dir).documents
     // offline training: the model tables are built ONCE and score the
     // static corpus for the thresholds too — knScoreWith/knScoreJoinWith
     // are bit-identical to knLogprobOn (the B51 parity), so the frozen
     // thresholds equal the batch key's by construction
     val t = CorpusOps.knTrainTablesOn(static, "doc_id", "text")
-    val docs = spark.readStream.schema(static.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents",
+      schema = Some(static.schema))
     def thresholds(scoredStatic: DataFrame): (Double, Double) = {
       val r = scoredStatic
         .agg(percentile(col("cross_entropy"), lit(1.0 / 3)).as("t1"),
@@ -634,9 +604,7 @@ object StreamOps {
     val frozenDups = SaIndex.dupWindows(spark,
       SaIndex.ensureWindowIndex(spark, dir, TextOps.SubstrW))
       .localCheckpoint(eager = true)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents")
     def seed(mb: DataFrame): DataFrame = // ONE seeding spelling (TextOps)
       graft.operators.TextOps.seededDups(
         mb.select(col("doc_id"), col("text")))
@@ -663,9 +631,7 @@ object StreamOps {
     val frozenDups = SaIndex.dupWindows(spark,
       SaIndex.ensureWindowIndex(spark, dir, TextOps.SubstrW))
       .localCheckpoint(eager = true)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents")
     def seed(mb: DataFrame): DataFrame = // ONE seeding spelling (TextOps)
       graft.operators.TextOps.seededDups(
         mb.select(col("doc_id"), col("text")))
@@ -710,12 +676,8 @@ object StreamOps {
       .localCheckpoint(eager = true)
     @volatile var census = Dedup.dupWindowsOf(init, "doc_id", "text", w)
       .localCheckpoint(eager = true)
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(srcDir).schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val d = Tables.stream(spark, srcDir, glob,
+        Map("maxFilesPerTrigger" -> "1"))
       .select(col("doc_id"), col("text"))
     spark.streams.active.filter(_.name == ScrubRefreshLoopQueryName)
       .foreach(_.stop())
@@ -747,7 +709,7 @@ object StreamOps {
                 init.unionAll(
                   mb.sparkSession.read.parquet(log.getAbsolutePath)),
                 "doc_id", "text", w).localCheckpoint(eager = true)
-              unpersistLocalCheckpoint(stale)
+              graft.GraftSession.unpersistLocalCheckpoint(stale)
             }
             ()
         }.start()
@@ -759,11 +721,6 @@ object StreamOps {
       graft.sources.IndexScratch.deleteRec(log)
     }
   }
-
-  /** See [[graft.GraftSession.unpersistLocalCheckpoint]] — shared by the
-    * refresh loops here and the operators' iterative chains. */
-  private[graft] def unpersistLocalCheckpoint(df: DataFrame): Unit =
-    graft.GraftSession.unpersistLocalCheckpoint(df)
 
   val NbScoreQueryName = "graft_stream_nb_score"
 
@@ -782,10 +739,8 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val model = graft.operators.Pipeline.nbTrain(
       graft.operators.Pipeline.nbFrameOf(
-        spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text"))
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        Tables(spark, dir).documents, "doc_id", "text"))
+    val docs = Tables(spark, dir).stream("documents")
     drainViaParquetSink(spark, docs, NbScoreQueryName,
       xform = (mb, _) => graft.operators.Pipeline.nbScore(model,
         graft.operators.Pipeline.nbFrameOf(mb, "doc_id", "text")))
@@ -808,11 +763,11 @@ object StreamOps {
     * discipline: the stream adds only the drain. */
   def streamQualityEnsemble(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val static = spark.read.parquet(s"$dir/documents.parquet")
+    val static = Tables(spark, dir).documents
     val models = graft.operators.Pipeline
       .ensembleModelsOf(static, "doc_id", "text")
-    val docs = spark.readStream.schema(static.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents",
+      schema = Some(static.schema))
     drainViaParquetSink(spark, docs, EnsembleQueryName,
       xform = (mb, _) => graft.operators.Pipeline.qualityEnsembleWith(models, mb,
         "doc_id", "text"))
@@ -840,12 +795,12 @@ object StreamOps {
   def streamUnigramEncode(rootSpark: SparkSession, dir: String): DataFrame = {
     import graft.operators.CorpusOps
     val spark = streamingSession(rootSpark)
-    val static = spark.read.parquet(s"$dir/documents.parquet")
+    val static = Tables(spark, dir).documents
     val (costs, unk) = CorpusOps.uniCostsOf(
       CorpusOps.uniTrain(
         CorpusOps.uniDocsOf(static, "doc_id", "text")).last)
-    val docs = spark.readStream.schema(static.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents",
+      schema = Some(static.schema))
     drainViaParquetSink(spark, docs, UnigramQueryName,
       xform = (mb, _) => CorpusOps.unigramEncodeWith(costs, unk, mb,
         "doc_id", "text"))
@@ -870,7 +825,7 @@ object StreamOps {
     * gate scale (capacity ≥ distinct ⇒ exact counts), same oracle. */
   def streamHhTopk(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val sketches = eventsStream(spark, dir)
+    val sketches = Tables(spark, dir).stream("events")
       .select(to_date(col("ts")).as("day"),
         col("user_id").cast("string").as("item"))
       .groupBy(col("day"))
@@ -897,14 +852,12 @@ object StreamOps {
     * drain EQUALS the one-shot batch probe and shares C54's oracle. */
   def streamIndexProbe(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val hist = graft.sources.Tables(spark, dir).documents
+    val hist = Tables(spark, dir).documents
       .select(col("doc_id"), col("text"))
     val path = graft.sources.IndexScratch.path("dedupidx", dir)
     graft.sources.IndexScratch.ensure(path)(p =>
       graft.operators.Dedup.dedupIndexBuild(hist, "doc_id", "text", p))
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val d = Tables(spark, dir).stream("documents")
       .select(col("doc_id"), col("text"))
     // C27's deterministic arriving batch — the SHARED derivation, applied
     // map-side to the stream (drain == batch depends on one spelling)
@@ -936,13 +889,11 @@ object StreamOps {
   def streamDecontaminate(rootSpark: SparkSession, dir: String): DataFrame = {
     import graft.operators.CorpusOps
     val spark = streamingSession(rootSpark)
-    val bench = graft.sources.Tables(spark, dir).documents
+    val bench = Tables(spark, dir).documents
       .filter(col("doc_id") % CorpusOps.BenchmarkMod === 0)
       .select(col("doc_id"), col("text"))
     val bsh = CorpusOps.containmentBenchShingles(bench, "doc_id", "text", 3)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val d = Tables(spark, dir).stream("documents")
       .select(col("doc_id"), col("text"))
     // the SHARED seeded-leak derivation, applied map-side to the stream
     val train = CorpusOps.containmentLeakTrainOn(d)
@@ -966,9 +917,7 @@ object StreamOps {
     * pass_rate pages before a bad feed poisons a training snapshot. */
   def streamQualityDrift(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents")
     graft.operators.Pipeline.qualityDriftOf(
       drainComplete(spark,
         graft.operators.Pipeline.qualityDriftAggOn(docs), DriftQueryName))
@@ -987,9 +936,7 @@ object StreamOps {
     * high buckets on encoding noise. */
   def streamEntropyGate(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents")
     val agg = graft.operators.TextOps.textEntropyOn(docs)
       .groupBy(floor(col("entropy_nats") * 10).cast("int").as("h_bucket"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -1018,11 +965,9 @@ object StreamOps {
     import graft.operators.VectorOps
     val spark = streamingSession(rootSpark)
     val v = VectorOps.embedPcaAxis(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      Tables(spark, dir).embeddings, "vec_id", "embedding",
       VectorOps.PcaDim)
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val e = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val e = Tables(spark, dir).stream("embeddings")
     val agg = VectorOps.embedPcaProjectWith(v, e, "vec_id", "embedding")
       .groupBy(floor(col("pc1") * 10).cast("int").as("p_bucket"))
       .agg(count(lit(1)).as("n_vectors"))
@@ -1048,9 +993,7 @@ object StreamOps {
     * same DuckDB oracle as B29. */
   def streamUpsert(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet").parquet(dir)
+    val raw = Tables(spark, dir).stream("orders")
     val o = raw.select(col("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice"), lit(1L).as("version"))
     val changes = o.filter(col("o_orderkey") % graft.operators.OlapC.UpsertMod === 0)
@@ -1087,9 +1030,9 @@ object StreamOps {
     * watermark passes the key's TTL.) */
   def streamDedupTtl(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    def src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val t = Tables(spark, dir)
+    val schema = t.documents.schema
+    def src = t.stream("documents", schema = Some(schema))
       .select(col("doc_id"), col("text"))
     val stream = src.unionByName(
       src.filter(col("doc_id") % 7 === 0)
@@ -1124,17 +1067,14 @@ object StreamOps {
     * so drain == batch and the key shares `linreg_trend`'s oracle. */
   def streamLinregTrend(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val li = spark.read.option("pathGlobFilter", "lineitem.parquet")
-      .parquet(dir)
+    val li = Tables(spark, dir).lineitem
     val maxTsUs = li.agg(max(unix_micros(col("l_shipdate")))).head().getLong(0)
-    val raw = spark.readStream.schema(li.schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val raw = Tables(spark, dir).stream("lineitem", schema = Some(li.schema))
       .select(col("l_returnflag").as("grp"), col("l_shipdate").as("ts"),
         expr("CAST(l_extendedprice * (1.0 - l_discount) " +
           "AS DECIMAL(25,6))").as("rev"))
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(lit("_sentinel").as("grp"), col("ts"),
         lit(0.0).cast("decimal(25,6)").as("rev"))
     linregStreamOn(spark, raw.unionByName(sentinel))
@@ -1173,9 +1113,7 @@ object StreamOps {
     * == batch → shares `skyline_2d`'s oracle. */
   def streamSkyline(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/lineitem.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val raw = Tables(spark, dir).stream("lineitem")
     val pts = raw
       .select(col("l_extendedprice").cast("decimal(25,6)").as("price"),
         col("l_quantity").cast("decimal(25,6)").as("qty"))
@@ -1204,7 +1142,7 @@ object StreamOps {
     * no single-partition sort) is inherited here for free. */
   def streamRfm(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val ev = eventsStream(spark, dir)
+    val ev = Tables(spark, dir).stream("events")
     val perUser = ev
       .groupBy(col("user_id"))
       .agg(max(to_date(col("ts"))).as("seen_d"),
@@ -1245,19 +1183,16 @@ object StreamOps {
     * B91 exactly and the key keeps `basket_pairs`' oracle. */
   def streamBasketPairs(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val li = spark.read.option("pathGlobFilter", "lineitem.parquet")
-      .parquet(dir)
+    val li = Tables(spark, dir).lineitem
     val maxTsUs = li.agg(max(unix_micros(col("l_shipdate")))).head().getLong(0)
-    val raw = spark.readStream.schema(li.schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val raw = Tables(spark, dir).stream("lineitem", schema = Some(li.schema))
       .select(col("l_orderkey"), col("l_partkey"),
         col("l_shipdate").as("ts"))
     // events-shaped sentinel dir, renamed to the lineitem shape: its
     // bk = −1 row advances the watermark 3 gaps past the corpus max so
     // every basket settles before the drain terminates
     val sdir = sentinelDir(spark, dir, maxTsUs, 3 * StatefulBaskets.GapUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("user_id").as("l_orderkey"),
         col("event_id").as("l_partkey"), col("ts"))
     basketPairsStreamOn(spark, raw.unionByName(sentinel))
@@ -1348,16 +1283,13 @@ object StreamOps {
   /** The sentinel-terminated (l_orderkey, l_partkey, ts) lineitem feed
     * B113 and B131 both stream (one spelling). */
   private def kcoreFeed(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.option("pathGlobFilter", "lineitem.parquet")
-      .parquet(dir)
+    val li = Tables(spark, dir).lineitem
     val maxTsUs = li.agg(max(unix_micros(col("l_shipdate")))).head().getLong(0)
-    val raw = spark.readStream.schema(li.schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val raw = Tables(spark, dir).stream("lineitem", schema = Some(li.schema))
       .select(col("l_orderkey"), col("l_partkey"),
         col("l_shipdate").as("ts"))
     val sdir = sentinelDir(spark, dir, maxTsUs, 3 * StatefulBaskets.GapUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("user_id").as("l_orderkey"),
         col("event_id").as("l_partkey"), col("ts"))
     raw.unionByName(sentinel)
@@ -1446,9 +1378,7 @@ object StreamOps {
   def streamWinnow(rootSpark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextOps
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents")
     // seeding, fingerprinting, and the read tail are TextOps' shared
     // spellings — batch, stream, and spec cannot fork (r14 self-review)
     // r17 (guide §2.5 input skew): the gate's micro-batch arrives as ONE
@@ -1486,10 +1416,7 @@ object StreamOps {
     * the read tail iterates on the O(nations²) board. */
   def streamPagerank(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val li = spark.read.option("pathGlobFilter", "lineitem.parquet")
-      .parquet(dir)
-    val raw = spark.readStream.schema(li.schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val raw = Tables(spark, dir).stream("lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))
     pagerankStreamOn(spark, dir, raw)
   }
@@ -1499,7 +1426,7 @@ object StreamOps {
   private[streaming] def pagerankStreamOn(spark: SparkSession, dir: String,
       raw: DataFrame): DataFrame = {
     import graft.operators.OlapC
-    val t = graft.sources.Tables(spark, dir)
+    val t = Tables(spark, dir)
     // edge build and rank tail are OlapC's shared spellings — drain ==
     // batch by construction (r14 self-review: the inline copies could
     // fork the oracle sharing)
@@ -1527,10 +1454,7 @@ object StreamOps {
     * the fixed 25-node board. */
   def streamTriangle(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val li = spark.read.option("pathGlobFilter", "lineitem.parquet")
-      .parquet(dir)
-    val raw = spark.readStream.schema(li.schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val raw = Tables(spark, dir).stream("lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))
     triangleStreamOn(spark, dir, raw)
   }
@@ -1540,7 +1464,7 @@ object StreamOps {
   private[streaming] def triangleStreamOn(spark: SparkSession, dir: String,
       raw: DataFrame): DataFrame = {
     import graft.operators.OlapD
-    val t = graft.sources.Tables(spark, dir)
+    val t = Tables(spark, dir)
     // edge build and triangle tail are OlapD's shared spellings — drain
     // == batch by construction (the B114 discipline)
     val partials = drainViaParquetSink(spark, raw, TriangleQueryName,
@@ -1565,7 +1489,7 @@ object StreamOps {
   def streamRetention(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
     retentionStreamOn(spark,
-      eventsStream(spark, dir).select(col("user_id"), col("ts")))
+      Tables(spark, dir).stream("events").select(col("user_id"), col("ts")))
   }
 
   /** The B119 machine over ANY (user_id, ts) stream — split out so the
@@ -1592,7 +1516,7 @@ object StreamOps {
     * SHARES `user_ltv`'s oracle. */
   def streamUserLtv(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    userLtvStreamOn(spark, eventsStream(spark, dir)
+    userLtvStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("user_id"), col("ts"), col("event_type"), col("value")))
   }
 
@@ -1623,7 +1547,7 @@ object StreamOps {
   def streamIntervalCoverage(rootSpark: SparkSession,
       dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    coverageStreamOn(spark, eventsStream(spark, dir)
+    coverageStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("user_id"), col("ts"), col("event_id")))
   }
 
@@ -1655,7 +1579,7 @@ object StreamOps {
     * maintained forever in O(segments·k) state. */
   def streamThetaOps(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    thetaStreamOn(spark, eventsStream(spark, dir)
+    thetaStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("event_type"), col("user_id")))
   }
 
@@ -1681,7 +1605,7 @@ object StreamOps {
       dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
     streaksStreamOn(spark,
-      eventsStream(spark, dir).select(col("user_id"), col("ts")))
+      Tables(spark, dir).stream("events").select(col("user_id"), col("ts")))
   }
 
   /** The B124 machine over ANY (user_id, ts) stream. */
@@ -1720,10 +1644,9 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, EventsSentinelOffsetUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("user_id"), lit("_sentinel").as("event_type"), col("ts"))
-    shapleyStreamOn(spark, eventsStream(spark, dir)
+    shapleyStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("user_id"), col("event_type"), col("ts"))
       .unionByName(sentinel))
   }
@@ -1792,10 +1715,9 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
-    forecastSnaiveStreamOn(spark, eventsStream(spark, dir)
+    forecastSnaiveStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("ts"), col("event_type"), col("value"))
       .unionByName(sentinel))
   }
@@ -1851,10 +1773,9 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
-    changepointStreamOn(spark, eventsStream(spark, dir)
+    changepointStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("ts"), col("event_type"), col("value"))
       .unionByName(sentinel))
   }
@@ -1884,10 +1805,9 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
-    acfStreamOn(spark, eventsStream(spark, dir)
+    acfStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("ts"), col("event_type"), col("value"))
       .unionByName(sentinel))
   }
@@ -1915,10 +1835,9 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
-    ccfStreamOn(spark, eventsStream(spark, dir)
+    ccfStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("ts"), col("event_type"), col("value"))
       .unionByName(sentinel))
   }
@@ -1958,11 +1877,10 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sschema = spark.read.parquet(sdir).schema
-    val sentinel = spark.readStream.schema(sschema).parquet(sdir)
+    val sentinel = Tables.stream(spark, sdir, "*.parquet")
       .select(col("user_id"), col("ts"), col("event_id"),
         lit("_sentinel").as("event_type"))
-    topPathsStreamOn(spark, eventsStream(spark, dir)
+    topPathsStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"))
       .unionByName(sentinel), maxTsUs + PathsFlushOffsetUs)
@@ -2002,9 +1920,7 @@ object StreamOps {
     import graft.operators.VectorOps
     val spark = streamingSession(rootSpark)
     val cents = VectorOps.kmeansModelOf(spark, dir)
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val v = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val v = Tables(spark, dir).stream("embeddings")
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
     drainViaParquetSink(spark,
@@ -2026,9 +1942,7 @@ object StreamOps {
     * batch C107 → shares `ann_lsh_stats`' oracle. */
   def streamAnnLshStats(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val v = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val v = Tables(spark, dir).stream("embeddings")
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
     annLshStatsStreamOn(spark, v)
@@ -2071,10 +1985,7 @@ object StreamOps {
     * batch → SHARES `benford_audit`'s oracle. */
   def streamBenford(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir).schema
-    val li = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val li = Tables(spark, dir).stream("lineitem")
       .select(col("l_extendedprice"))
     benfordStreamOn(spark, li, "l_extendedprice")
   }
@@ -2109,9 +2020,7 @@ object StreamOps {
   def streamWeightedSample(rootSpark: SparkSession, dir: String): DataFrame = {
     import graft.operators.CorpusOps
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val d = Tables(spark, dir).stream("documents")
       .select(col("doc_id"), col("text"))
     // C40's OWN priority derivation (shared helper — the spelling cannot
     // fork from the batch sample the oracle compares against)
@@ -2125,7 +2034,7 @@ object StreamOps {
       .select((col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("doc_id"),
         col("col.score").cast("long").as("key_pico"))
-    val attrs = graft.sources.Tables(rootSpark, dir).documents
+    val attrs = Tables(rootSpark, dir).documents
       .select(col("doc_id"),
         size(graft.operators.TextOps.tokens(col("text"))).cast("bigint")
           .as("n_tokens"))
@@ -2152,9 +2061,7 @@ object StreamOps {
     val boiler = CorpusOps
       .boilerLinesOf(CorpusOps.lineCorpus(spark, dir), "doc_id", "text")
       .localCheckpoint(eager = true)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val d = Tables(spark, dir).stream("documents")
       .select(col("doc_id"), col("text"))
     val arriving = CorpusOps.lineCorpusOn(d)
     drainViaParquetSink(spark, arriving, LineDedupQueryName,
@@ -2179,8 +2086,7 @@ object StreamOps {
     import graft.sources.Sinks
     val spark = streamingSession(rootSpark)
     val path = Sinks.schemaEvolutionScratch(spark, dir)
-    val merged = spark.read.option("mergeSchema", "true").parquet(path).schema
-    val d = spark.readStream.schema(merged).parquet(path)
+    val d = Tables.stream(spark, path, "*.parquet", Map("mergeSchema" -> "true"))
     drainComplete(spark, Sinks.schemaEvolutionCensusOn(d), SchevoQueryName)
       .orderBy(col("era"))
   }
@@ -2196,9 +2102,7 @@ object StreamOps {
     * batch B71 — same oracle. */
   def streamCdcCompact(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet").parquet(dir)
+    val raw = Tables(spark, dir).stream("orders")
     // the SAME three-arm feed spelling as the batch entry (shared helper
     // — the spellings cannot fork), derived from the one streamed source
     val (base, changes) = graft.operators.OlapC.cdcFeedOn(raw)
@@ -2222,9 +2126,7 @@ object StreamOps {
     import graft.operators.Multimodal
     val spark = streamingSession(rootSpark)
     val path = Multimodal.phashIndexEnsure(spark, dir)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val d = Tables(spark, dir).stream("documents")
     val arriving = Multimodal.leakedMediaOf(d)
     drainViaParquetSink(spark, arriving, PhashProbeQueryName,
       xform = (mb, _) => Multimodal.phashIndexProbe(mb.sparkSession, path, mb))
@@ -2247,7 +2149,8 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     graft.operators.OlapC.quantileSketchOf(
       drainComplete(spark,
-        graft.operators.OlapC.quantileDailyAggOn(eventsStream(spark, dir)),
+        graft.operators.OlapC.quantileDailyAggOn(
+          Tables(spark, dir).stream("events")),
         QuantileQueryName))
   }
 
@@ -2288,9 +2191,7 @@ object StreamOps {
   def streamPackBestfit(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docs = Tables(spark, dir).stream("documents")
     // the same (doc_id, n_tokens, shard) derivation as C71's batch packer
     val keyed = docs.select(col("doc_id").cast("long").as("doc_id"),
         size(graft.operators.TextOps.tokens(col("text"))).cast("bigint")
@@ -2343,12 +2244,8 @@ object StreamOps {
   def streamIndexAdmitLoop(rootSpark: SparkSession, srcDir: String,
       glob: String, indexPath: String, vacuumEvery: Int = 0): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(srcDir).schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val d = Tables.stream(spark, srcDir, glob,
+        Map("maxFilesPerTrigger" -> "1"))
       .select(col("doc_id"), col("text"))
     spark.streams.active.filter(_.name == IndexAdmitLoopQueryName)
       .foreach(_.stop())
@@ -2414,12 +2311,8 @@ object StreamOps {
       glob: String, indexPath: String, w: Int,
       vacuumEvery: Int = 0): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(srcDir).schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val d = Tables.stream(spark, srcDir, glob,
+        Map("maxFilesPerTrigger" -> "1"))
       .select(col("doc_id"), col("text"))
     spark.streams.active.filter(_.name == SaAdmitLoopQueryName)
       .foreach(_.stop())
@@ -2479,12 +2372,8 @@ object StreamOps {
   def winnowIndexAdmitLoop(rootSpark: SparkSession, srcDir: String,
       glob: String, indexPath: String, vacuumEvery: Int = 0): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(srcDir).schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val d = Tables.stream(spark, srcDir, glob,
+        Map("maxFilesPerTrigger" -> "1"))
       .select(col("doc_id"), col("text"))
     spark.streams.active.filter(_.name == WinnowAdmitLoopQueryName)
       .foreach(_.stop())
@@ -2545,12 +2434,8 @@ object StreamOps {
       glob: String, indexPath: String, k: Int = 3,
       vacuumEvery: Int = 0): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(srcDir).schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val d = Tables.stream(spark, srcDir, glob,
+        Map("maxFilesPerTrigger" -> "1"))
       .select(col("vec_id"), col("embedding").cast("array<double>")
         .as("emb"))
     spark.streams.active.filter(_.name == GraphAdmitLoopQueryName)
@@ -2606,7 +2491,7 @@ object StreamOps {
   def streamAbTtest(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
     graft.operators.OlapD.abTtestBoardOn(
-      drainViaParquetSink(spark, eventsStream(spark, dir),
+      drainViaParquetSink(spark, Tables(spark, dir).stream("events"),
         AbTtestQueryName,
         xform = (mb, _) => graft.operators.OlapD.abTtestPartialsOn(mb)))
   }
@@ -2625,12 +2510,10 @@ object StreamOps {
     * `sssp_cost`'s oracle. */
   def streamSssp(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val orders = graft.sources.Tables(spark, dir).orders
+    val orders = Tables(spark, dir).orders
       .select(col("o_orderkey"), col("o_custkey"))
       .localCheckpoint(eager = true)
-    val schema = spark.read.parquet(s"$dir/lineitem.parquet").schema
-    val li = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val li = Tables(spark, dir).stream("lineitem")
     ssspStreamOn(rootSpark, orders, li)
   }
 
@@ -2675,9 +2558,7 @@ object StreamOps {
     import graft.operators.Linkage
     val spark = streamingSession(rootSpark)
     val a = Linkage.sideA(spark, dir).localCheckpoint(eager = true)
-    val schema = spark.read.parquet(s"$dir/customer.parquet").schema
-    val customers = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "customer.parquet").parquet(dir)
+    val customers = Tables(spark, dir).stream("customer")
     recordLinkageStreamOn(rootSpark, a, customers)
   }
 
@@ -2703,7 +2584,7 @@ object StreamOps {
   def streamAdmissionChain(rootSpark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{CorpusOps, Dedup, Pipeline}
     val spark = streamingSession(rootSpark)
-    val hist = graft.sources.Tables(spark, dir).documents
+    val hist = Tables(spark, dir).documents
       .select(col("doc_id"), col("text"))
     val path = graft.sources.IndexScratch.path("dedupidx", dir)
     graft.sources.IndexScratch.ensure(path)(p =>
@@ -2719,9 +2600,7 @@ object StreamOps {
     graft.sources.IndexScratch.ensure(winPath)(tmp =>
       Pipeline.admissionHistWinnow(hist).write.parquet(tmp))
     val histWinnow = spark.read.parquet(winPath)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val d = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val d = Tables(spark, dir).stream("documents")
       .select(col("doc_id"), col("text"))
     val arriving = Pipeline.admissionBatchOn(d)
     drainViaParquetSink(spark, arriving, AdmissionQueryName,

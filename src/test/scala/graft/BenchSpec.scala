@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
 class BenchSpec extends AnyFunSuite {
 
   private def bench(names: Seq[String], drain: String => Option[Double],
-      alive: () => Boolean, probe: () => Double): (JsonNode, JsonNode) = {
-    val (full, line) = Bench.run(names, "sf", cpus = 4, lavgStart = 0.0,
+      alive: () => Boolean, probe: () => Double,
+      lavgStart: Double = 0.0): (JsonNode, JsonNode) = {
+    val (full, line) = Bench.run(names, "sf", cpus = 4, lavgStart = lavgStart,
       drain, alive, probe)
     val m = new ObjectMapper
     (m.readTree(full), m.readTree(line))
@@ -57,5 +58,17 @@ class BenchSpec extends AnyFunSuite {
       load.get("floor_verdict").asText === "degraded")
     val sha = full.get("git_sha")
     assert(sha.isNull || sha.asText.matches("[0-9a-f]{40}"), sha)
+  }
+
+  test("a busy host with flat probes is not load-dirty and drains once") {
+    val drained = Seq.newBuilder[String]
+    val (full, _) = bench(Seq("a", "b"), { n => drained += n; Some(0.5) },
+      () => true, () => 0.1, lavgStart = 8.0)
+    assert(drained.result() === Seq("a", "b"))
+    val load = full.get("load")
+    assert(!load.get("load_dirty").asBoolean)
+    assert(load.get("n_requeried").asInt === 0)
+    assert(load.get("loadavg_start").asDouble === 8.0)
+    assert(load.get("floor_verdict").asText === "healthy")
   }
 }

@@ -11,7 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, MapType, StructType}
   *    comparator orders rows with pandas, which cannot sort array/struct
   *    cells (the round-1 etl_receipts_nested failure mode);
   *  - the library ships no dev harness: the only mains are the driver
-  *    entry points.
+  *    entry points;
+  *  - `graft.sources.Tables` is the one reader of the table layout: no
+  *    other source file opens a file stream, names a table's file or
+  *    converts the events' nanosecond `ts`.
   */
 class PlanGuardSpec extends SparkSpec {
 
@@ -334,5 +337,31 @@ class PlanGuardSpec extends SparkSpec {
       .map(_.getFileName.toString.stripSuffix(".scala")).toSet
     finally walk.close()
     assert(mains === Set("Bench", "Verify", "PlanDump"))
+  }
+
+  test("only Tables reads the table layout, replays file streams or converts ts") {
+    import scala.jdk.CollectionConverters._
+    val tables = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
+    val rules = Seq(
+      "spark.readStream" -> """\breadStream\b""".r,
+      "a table's file name" -> ("\\b(" + tables.mkString("|") + ")\\.parquet\"").r,
+      "ts div 1000" -> """\bts\s+div\s+1000\b""".r)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val offenders = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(java.nio.file.Paths.get("graft/sources/Tables.scala")))
+      .flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala
+        for {
+          (line, i) <- lines.zipWithIndex
+          // comments may name the mechanism; code may not use it
+          code = line.replaceAll("^\\s*(\\*|/\\*\\*?|//).*", "")
+            .replaceAll("//.*", "")
+          (what, re) <- rules if re.findFirstIn(code).isDefined
+        } yield s"$p:${i + 1} $what"
+      }.toList
+    finally walk.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
