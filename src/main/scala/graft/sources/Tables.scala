@@ -29,22 +29,22 @@ final case class Tables(spark: SparkSession, dir: String) {
     * schema costs one footer peek unless the caller passes the schema of a
     * batch frame of the same table that it already holds (the file's own
     * schema: not that of `events`, whose `ts` is already converted). */
-  def stream(name: String, opts: Map[String, String] = Map.empty,
-      schema: Option[StructType] = None): DataFrame =
+  def stream(name: String, schema: Option[StructType] = None): DataFrame =
     Tables.replay(spark, dir, Tables.file(name),
-      schema.getOrElse(t(name).schema), opts)
+      schema.getOrElse(t(name).schema), Map.empty)
 }
 
 object Tables {
   /** The file table `name` lives in under a scale-factor directory. */
   def file(name: String): String = s"$name.parquet"
 
-  /** The parquet files under `dir` matching `glob` (a sentinel, scratch or
-    * wave directory) replayed as a file stream with their batch schema,
-    * taken from one footer peek. `opts` configure both the peek and the
-    * source, e.g. `mergeSchema` for files that span schema versions or
+  /** The parquet files under `dir` matching `glob` (every file of a
+    * sentinel or scratch directory by default, or a wave directory's
+    * pattern) replayed as a file stream with their batch schema, taken
+    * from one footer peek. `opts` configure both the peek and the source,
+    * e.g. `mergeSchema` for files that span schema versions or
     * `maxFilesPerTrigger` for one file per micro-batch. */
-  def stream(spark: SparkSession, dir: String, glob: String,
+  def stream(spark: SparkSession, dir: String, glob: String = "*.parquet",
       opts: Map[String, String] = Map.empty): DataFrame =
     replay(spark, dir, glob, spark.read.option("pathGlobFilter", glob)
       .options(opts).parquet(dir).schema, opts)

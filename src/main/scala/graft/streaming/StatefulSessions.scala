@@ -78,27 +78,23 @@ object StatefulSessions {
 
   val QueryName = "graft_stream_sessions"
 
-  /** One source's events, normalized to (user_id, event_id, value, ts).
-    * `sourceOptions` feeds the file source (the multi-batch replay specs
-    * pass maxFilesPerTrigger=1 to split time-ordered waves into one
-    * micro-batch each). */
-  private[graft] def rawEvents(spark: SparkSession, dir: String, glob: String,
-      sourceOptions: Map[String, String] = Map.empty): DataFrame = {
-    Tables.stream(spark, dir, glob, sourceOptions)
-      .select(col("user_id"), col("event_id"), col("value"), col("ts"))
-  }
+  /** One source's events, normalized to (user_id, event_id, value, ts). */
+  private[graft] def rawEvents(src: DataFrame): DataFrame =
+    src.select(col("user_id"), col("event_id"), col("value"), col("ts"))
 
   /** The sessionizer DAG over a streaming event source — shared by the
     * driver query (parquet-sink drain) and durable deployments (file/Kafka
     * sink + checkpoint; see StatefulSessionsSpec's recovery test). `extra`
     * unions a second streaming source (the driver query's watermark
-    * sentinel). */
+    * sentinel). `sourceOptions` feeds the file source (the multi-batch
+    * replay specs pass maxFilesPerTrigger=1 to split time-ordered waves
+    * into one micro-batch each). */
   def sessionsStream(spark: SparkSession, dir: String,
       glob: String = Tables.file("events"),
       extra: Option[DataFrame] = None,
       sourceOptions: Map[String, String] = Map.empty): Dataset[SessionOut] = {
     import spark.implicits._
-    val base = rawEvents(spark, dir, glob, sourceOptions)
+    val base = rawEvents(Tables.stream(spark, dir, glob, sourceOptions))
     val all = extra.fold(base)(base.unionByName(_))
     // the watermark column must survive into the typed Dataset for
     // EventTimeTimeout bookkeeping
@@ -128,7 +124,7 @@ object StatefulSessions {
     val spark = StreamOps.streamingSession(rootSpark) // isolated conf
     val (maxTsUs, realCount) = eventStats(spark, dir)
     val sessions = sessionsStream(spark, dir,
-      extra = Some(rawEvents(spark, sentinelDir(spark, dir, maxTsUs), "*.parquet")))
+      extra = Some(rawEvents(Tables.stream(spark, sentinelDir(spark, dir, maxTsUs)))))
     // O(sessions) output grows with the corpus: parquet-sink drain, the
     // driver never holds session rows. Sentinel-flush correctness needs the
     // sentinel consumed in the same micro-batch as every real event; with
@@ -232,9 +228,8 @@ object StatefulSessions {
   def streamScd2(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = StreamOps.streamingSession(rootSpark)
     val (maxTsUs, realCount) = eventStats(spark, dir)
-    val sentinel = rawEvents(spark,
-        StreamOps.sentinelDir(spark, dir, maxTsUs, Scd2IdleUs + 3 * GapUs),
-        "*.parquet")
+    val sentinel = rawEvents(Tables.stream(spark,
+        StreamOps.sentinelDir(spark, dir, maxTsUs, Scd2IdleUs + 3 * GapUs)))
       .select(col("user_id"), col("event_id"),
         lit("_sentinel").as("event_type"), col("ts"))
     val runs = scd2Stream(spark, dir, extra = Some(sentinel))
@@ -267,8 +262,8 @@ object StatefulSessions {
   def streamSessionsNative(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = StreamOps.streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
-    val ev = rawEvents(spark, dir, Tables.file("events")).unionByName(
-      rawEvents(spark, sentinelDir(spark, dir, maxTsUs), "*.parquet"))
+    val ev = rawEvents(Tables.stream(spark, dir, Tables.file("events"))).unionByName(
+      rawEvents(Tables.stream(spark, sentinelDir(spark, dir, maxTsUs))))
     val agg = ev
       .withWatermark("ts", "1 second")
       .groupBy(col("user_id"),
@@ -361,8 +356,8 @@ object StatefulSessions {
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
     val (maxTsUs, realCount) = eventStats(spark, dir)
-    val base = rawEvents(spark, dir, Tables.file("events")).unionByName(
-      rawEvents(spark, sentinelDir(spark, dir, maxTsUs), "*.parquet"))
+    val base = rawEvents(Tables.stream(spark, dir, Tables.file("events"))).unionByName(
+      rawEvents(Tables.stream(spark, sentinelDir(spark, dir, maxTsUs))))
     val evs: Dataset[Ev] = base
       .withWatermark("ts", "1 second")
       .select(col("user_id"), col("event_id"),

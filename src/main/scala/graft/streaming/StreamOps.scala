@@ -85,7 +85,7 @@ object StreamOps {
     // finalizes ALL of them and still equals the batch aggregation.
     val (maxTsUs, realCount) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, EventsSentinelOffsetUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
     val agg = ev.unionByName(sentinel)
       .withWatermark("ts", "1 hour")
@@ -1074,7 +1074,7 @@ object StreamOps {
         expr("CAST(l_extendedprice * (1.0 - l_discount) " +
           "AS DECIMAL(25,6))").as("rev"))
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(lit("_sentinel").as("grp"), col("ts"),
         lit(0.0).cast("decimal(25,6)").as("rev"))
     linregStreamOn(spark, raw.unionByName(sentinel))
@@ -1192,7 +1192,7 @@ object StreamOps {
     // bk = −1 row advances the watermark 3 gaps past the corpus max so
     // every basket settles before the drain terminates
     val sdir = sentinelDir(spark, dir, maxTsUs, 3 * StatefulBaskets.GapUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("user_id").as("l_orderkey"),
         col("event_id").as("l_partkey"), col("ts"))
     basketPairsStreamOn(spark, raw.unionByName(sentinel))
@@ -1289,7 +1289,7 @@ object StreamOps {
       .select(col("l_orderkey"), col("l_partkey"),
         col("l_shipdate").as("ts"))
     val sdir = sentinelDir(spark, dir, maxTsUs, 3 * StatefulBaskets.GapUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("user_id").as("l_orderkey"),
         col("event_id").as("l_partkey"), col("ts"))
     raw.unionByName(sentinel)
@@ -1644,7 +1644,7 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, EventsSentinelOffsetUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("user_id"), lit("_sentinel").as("event_type"), col("ts"))
     shapleyStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("user_id"), col("event_type"), col("ts"))
@@ -1715,7 +1715,7 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
     forecastSnaiveStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("ts"), col("event_type"), col("value"))
@@ -1773,7 +1773,7 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
     changepointStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("ts"), col("event_type"), col("value"))
@@ -1805,7 +1805,7 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
     acfStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("ts"), col("event_type"), col("value"))
@@ -1835,7 +1835,7 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("ts"), lit("_sentinel").as("event_type"), col("value"))
     ccfStreamOn(spark, Tables(spark, dir).stream("events")
       .select(col("ts"), col("event_type"), col("value"))
@@ -1877,7 +1877,7 @@ object StreamOps {
     val spark = streamingSession(rootSpark)
     val (maxTsUs, _) = eventStats(spark, dir)
     val sdir = sentinelDir(spark, dir, maxTsUs, DaySentinelOffsetUs)
-    val sentinel = Tables.stream(spark, sdir, "*.parquet")
+    val sentinel = Tables.stream(spark, sdir)
       .select(col("user_id"), col("ts"), col("event_id"),
         lit("_sentinel").as("event_type"))
     topPathsStreamOn(spark, Tables(spark, dir).stream("events")
@@ -2086,7 +2086,7 @@ object StreamOps {
     import graft.sources.Sinks
     val spark = streamingSession(rootSpark)
     val path = Sinks.schemaEvolutionScratch(spark, dir)
-    val d = Tables.stream(spark, path, "*.parquet", Map("mergeSchema" -> "true"))
+    val d = Tables.stream(spark, path, opts = Map("mergeSchema" -> "true"))
     drainComplete(spark, Sinks.schemaEvolutionCensusOn(d), SchevoQueryName)
       .orderBy(col("era"))
   }

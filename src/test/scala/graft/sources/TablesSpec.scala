@@ -34,7 +34,7 @@ class TablesSpec extends SparkSpec {
       spark.range(1)
         .select(lit(-1L).as("user_id"), timestamp_micros(lit(tsUs)).as("ts"))
         .write.mode("overwrite").parquet(sdir.toString)
-      val rows = drain(Tables.stream(spark, sdir.toString, "*.parquet"),
+      val rows = drain(Tables.stream(spark, sdir.toString),
         "tables_spec_sentinel")
       assert(rows.schema("ts").dataType === TimestampType)
       val r = rows.select(col("user_id"), unix_micros(col("ts"))).collect()
