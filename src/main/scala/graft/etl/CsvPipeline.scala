@@ -109,7 +109,7 @@ object CsvPipeline {
         min_by(col("invoice_date_raw"), rowContentKey).as("invoice_date_raw"),
         min_by(col("invoice_amount"), rowContentKey).as("total_amount"),
         min_by(col("tax"), rowContentKey).as("sales_tax"),
-        (sum(col("price").cast("decimal(25,2)"))).cast("double").as("subtotal"),
+        graft.operators.Olap.dsum(col("price"), 2).as("subtotal"),
         count(lit(1)).as("item_count"),
         // element order = the same content tuple (array_sort compares
         // struct fields in declaration order) — stable under any layout

@@ -449,7 +449,7 @@ object CorpusOps {
     // one corpus pass for the two global stats (exact: integer count,
     // integer-valued decimal sum)
     val stats = docs
-      .agg(count(lit(1)).as("n"), sum(col("dl").cast("decimal(25,6)")).as("s"))
+      .agg(count(lit(1)).as("n"), Olap.exactSum(col("dl"), 6).as("s"))
       .head()
     val nDocs = stats.getLong(0)
     val avgdl = stats.getDecimal(1).doubleValue() / nDocs

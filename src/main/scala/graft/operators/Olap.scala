@@ -1,25 +1,43 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
+import graft.functions.ExactSum
 import graft.sources.Tables
 
 /** Core OLAP queries — the batch query surface of the engine (SURVEY §2 B).
   *
   * Oracle-parity rules used throughout:
-  *  - money/double aggregates accumulate in DECIMAL (order-independent,
-  *    bit-identical between engines), then cast back to DOUBLE;
+  *  - money/double aggregates accumulate exactly ([[exactSum]]:
+  *    order-independent, bit-identical between engines), then cast back
+  *    to DOUBLE;
   *  - every query ends with a fully deterministic ORDER BY.
   */
 object Olap {
 
-  /** Decimal-exact sum of a double expression, returned as double.
-    * `sum` over decimal is order-independent, so the result is identical no
-    * matter how Spark partitions the data — required for oracle hash-match
-    * and good hygiene on a 1000-executor cluster.
-    */
+  /** Decimal-exact sum of an expression, returned as double: the double of
+    * [[exactSum]]. Rows are rounded to integer units (in double arithmetic,
+    * error < 2^-8 unit, when more than 2^-6 from a tie) and summed as longs,
+    * exact up to 2^42 rows per group, so the result is identical no matter
+    * how Spark partitions the data — required for oracle hash-match and
+    * good hygiene on a 1000-executor cluster. */
   def dsum(e: Column, scale: Int = 6): Column =
-    sum(e.cast(s"decimal(25,$scale)")).cast("double")
+    exactSum(e, scale).cast("double")
+
+  /** `sum(e.cast("decimal(25,scale)"))` — its DECIMAL(35,scale) value and
+    * type, nulls and errors — without a BigDecimal per row
+    * ([[graft.functions.ExactSum]]); `over` makes it a window sum. */
+  def exactSum(e: Column, scale: Int, over: Option[WindowSpec] = None): Column = {
+    val s = column(ExactSum(expression(e), scale).toAggregateExpression())
+    over.fold(s)(s.over(_))
+  }
+
+  /** Row `e` as a LONG count of 10^-scale units: the value, nulls and errors
+    * of `CAST(CAST(e AS DECIMAL(25,scale)) * 10^scale AS BIGINT)`, the
+    * units [[exactSum]] adds. */
+  def units(e: Column, scale: Int): Column = column(ExactSum.units(expression(e), scale))
 
   /** Pricing summary (TPC-H Q1 shape): wide aggregation with partial
     * (map-side) aggregation — one shuffle on a tiny key space. */

@@ -119,10 +119,10 @@ object OlapB {
       .orderBy(col("o_orderdate"), col("o_orderkey"))
     val wRun = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wMov = ord.rowsBetween(-2, Window.currentRow)
-    // Running sums accumulate in DECIMAL within a deterministic row order,
-    // so they are bit-identical across engines and partitionings.
+    // Running sums are exact (Olap.exactSum) within a deterministic row
+    // order, so they are bit-identical across engines and partitionings.
     def rsum(w: org.apache.spark.sql.expressions.WindowSpec): Column =
-      sum(col("o_totalprice").cast("decimal(25,2)")).over(w).cast("double")
+      Olap.exactSum(col("o_totalprice"), 2, Some(w)).cast("double")
     Tables(spark, dir).orders
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
         rsum(wRun).as("running_spend"), rsum(wMov).as("last3_spend"))

@@ -181,8 +181,8 @@ object OlapC {
       .agg(
         sum(when(col("event_type") === convType, 1L).otherwise(0L))
           .as("n_purch"),
-        coalesce(sum(when(col("event_type") === convType, col("value"))
-          .cast("decimal(25,2)")), lit(0).cast("decimal(25,2)"))
+        coalesce(Olap.exactSum(when(col("event_type") === convType, col("value")), 2),
+          lit(0).cast("decimal(25,2)"))
           .cast("decimal(25,2)").as("val_mass"))
 
   /** B120 read tail: B90's LTV triangle from ANY merged (user_id, wk,
@@ -363,7 +363,7 @@ object OlapC {
     events
       .groupBy(to_date(col(tsCol)).as("day"), col(typeCol).as("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col(valCol).cast("decimal(25,2)")).as("_vsum"),
+        Olap.exactSum(col(valCol), 2).as("_vsum"),
         max(col(valCol)).as("value_max"))
 
   /** Merge an arriving delta's partial aggregate into the materialized
@@ -805,7 +805,7 @@ object OlapC {
       valueCol: String, seasonDays: Int = SnaiveSeasonDays): DataFrame = {
     val daily = events
       .groupBy(col(typeCol).as("grp"), to_date(col(tsCol)).as("d"))
-      .agg(sum(col(valueCol).cast("decimal(25,6)")).as("v"))
+      .agg(Olap.exactSum(col(valueCol), 6).as("v"))
     val pred = daily.select(col("grp"),
       date_add(col("d"), seasonDays).as("d"), col("v").as("v_pred"))
     daily.join(pred, Seq("grp", "d"), "left")
@@ -920,7 +920,7 @@ object OlapC {
     * last hour, as of each event"). A RANGE frame on event-time keyed by
     * `user_id`: one shuffle, and the frame is defined by VALUES (ties get
     * identical frames), so the result is deterministic under any row
-    * order. Decimal sum keeps the rolling total exact. */
+    * order. The exact sum keeps the rolling total exact. */
   def rollingFeaturesOn(events: DataFrame, keyCol: String, tsUsCol: String,
       idCol: String, valCol: String, windowUs: Long): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
@@ -930,7 +930,7 @@ object OlapC {
         col(idCol).as("event_id"), col(valCol).as("value"))
       .select(col("event_id"), col("user_id"), col("ts_us"),
         count(lit(1)).over(w).as("n_1h"),
-        sum(col("value").cast("decimal(25,2)")).over(w).cast("double")
+        Olap.exactSum(col("value"), 2, Some(w)).cast("double")
           .as("vsum_1h"))
       .orderBy(col("event_id"))
   }
@@ -1298,7 +1298,7 @@ object OlapC {
     Skew.saltedJoin(ev, dim, "k", SaltBuckets)
       .groupBy(col("k"), col("label"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(25,2)")).cast("double").as("value_sum"))
+        Olap.dsum(col("value"), 2).as("value_sum"))
       .orderBy(col("k"))
   }
 
@@ -1739,7 +1739,7 @@ object OlapC {
     // through Exact's guarded cast, never as a silent null or wrap)
     val daily = events
       .groupBy(col(typeCol).as("grp"), to_date(col(tsCol)).as("d"))
-      .agg(sum(col(valueCol).cast("decimal(25,6)")).as("_v"))
+      .agg(Olap.exactSum(col(valueCol), 6).as("_v"))
       .select(col("grp"), col("d"),
         Exact.guardedMicro("changepoint_cusum")(col("_v") * 1000000,
           "daily micro total").as("v"))
@@ -1842,7 +1842,7 @@ object OlapC {
     val guarded = Exact.guardedLong("acf_lags") _
     val daily = events
       .groupBy(col(typeCol).as("grp"), to_date(col(tsCol)).as("d"))
-      .agg(sum(col(valueCol).cast("decimal(25,6)")).as("_v"))
+      .agg(Olap.exactSum(col(valueCol), 6).as("_v"))
       .select(col("grp"), col("d"),
         Exact.guardedMicro("acf_lags")(floor(col("_v")), "daily total")
           .as("v"))
@@ -1959,7 +1959,7 @@ object OlapC {
     val guarded = Exact.guardedLong("ccf_leadlag") _
     val daily = events
       .groupBy(col(typeCol).as("grp"), to_date(col(tsCol)).as("d"))
-      .agg(sum(col(valueCol).cast("decimal(25,6)")).as("_v"))
+      .agg(Olap.exactSum(col(valueCol), 6).as("_v"))
       .select(col("grp"), col("d"),
         Exact.guardedMicro("ccf_leadlag")(floor(col("_v")), "daily total")
           .as("v"))
@@ -2055,7 +2055,7 @@ object OlapC {
     val guarded = Exact.guardedLong("seasonal_detrend") _
     val daily = events
       .groupBy(col(typeCol).as("grp"), to_date(col(tsCol)).as("d"))
-      .agg(sum(col(valueCol).cast("decimal(25,6)")).as("_v"))
+      .agg(Olap.exactSum(col(valueCol), 6).as("_v"))
       .select(col("grp"), col("d"),
         Exact.guardedMicro("seasonal_detrend")(col("_v") * 1000000,
           "daily micro total").as("v"))

@@ -838,7 +838,7 @@ object OlapD {
       .groupBy(col("user_id"))
       .agg(max(to_date(col("ts"))).as("last_d"),
         count(lit(1)).as("frequency"),
-        sum(col("value").cast("decimal(25,6)")).as("monetary_dec"))
+        Olap.exactSum(col("value"), 6).as("monetary_dec"))
     rfmTailOn(perUser, anchor, exact)
   }
 
@@ -1072,7 +1072,7 @@ object OlapD {
     // sums) — truncate the corpus-scan subtree so it runs once
     val daily = items
       .groupBy(col(groupCol).as("grp"), to_date(col(dateCol)).as("d"))
-      .agg(sum(col(revenueCol).cast("decimal(25,6)")).as("rev"))
+      .agg(Olap.exactSum(col(revenueCol), 6).as("rev"))
       .select(col("grp"), col("d"),
         floor(col("rev")).cast("decimal(20,0)").as("y"))
       .localCheckpoint(eager = true)
@@ -1709,7 +1709,7 @@ object OlapD {
       .groupBy(col("event_type"), col("arm"))
       .agg(count(lit(1)).as("n"),
         Exact.guardedLong("ab_ttest")(
-          sum(col("_m").cast("decimal(25,0)")), "milli sum").as("s"),
+          Olap.exactSum(col("_m"), 0), "milli sum").as("s"),
         Exact.guardedLong("ab_ttest")(
           sum((col("_m") * col("_m")).cast("decimal(30,0)")),
           "milli sum of squares").as("q"))
@@ -1728,9 +1728,9 @@ object OlapD {
   def abTtestBoardOn(partials: DataFrame): DataFrame = {
     val merged = partials.groupBy(col("event_type"), col("arm"))
       .agg(Exact.guardedLong("ab_ttest")(
-          sum(col("n").cast("decimal(25,0)")), "count").as("n"),
+          Olap.exactSum(col("n"), 0), "count").as("n"),
         Exact.guardedLong("ab_ttest")(
-          sum(col("s").cast("decimal(25,0)")), "milli sum").as("s"),
+          Olap.exactSum(col("s"), 0), "milli sum").as("s"),
         Exact.guardedLong("ab_ttest")(
           sum(col("q").cast("decimal(30,0)")), "milli sumsq").as("q"))
     def side(arm: Int, sfx: String) = merged.filter(col("arm") === arm)

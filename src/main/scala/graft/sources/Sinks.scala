@@ -1597,7 +1597,7 @@ object Sinks {
           "o_orderkey", "version")
         .filter(col("op") =!= "D")
         .agg(count(lit(1)).as("n_live"),
-          sum(col("o_totalprice").cast("decimal(25,2)")).cast("double")
+          graft.operators.Olap.dsum(col("o_totalprice"), 2)
             .as("total_value"),
           censusFingerprint(h48).as("content_h"))
         .select(lit(v).as("as_of_version"), col("n_live"),
@@ -1749,7 +1749,7 @@ object Sinks {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("day_value_dec").desc, col("event_date"))
     val topDays = fact.groupBy(col("event_date"))
-      .agg(sum(col("value").cast("decimal(25,6)")).as("day_value_dec"))
+      .agg(graft.operators.Olap.exactSum(col("value"), 6).as("day_value_dec"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= DppTopDays)
       .select(col("event_date").as("d"))

@@ -41,8 +41,8 @@ object StatefulSessions {
       start_us: Long, end_us: Long, session_value: Double)
 
   private def close(userId: Long, s: SessionState): SessionOut =
-    // cents/100.0 is the correctly-rounded double of the exact decimal sum,
-    // so this bit-matches the batch dsum(value, 2) column
+    // cents are Olap.units(value, 2), the units dsum(value, 2) sums, so
+    // cents/100.0 is the correctly-rounded double of the same exact sum
     SessionOut(userId, s.n, s.start_us, s.end_us, s.cents / 100.0)
 
   /** Incremental sessionizer for one user's new events. Events within a
@@ -102,8 +102,7 @@ object StatefulSessions {
       .withWatermark("ts", "1 second")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
-        // exact cents via the same decimal(25,2) quantization dsum uses
-        (col("value").cast("decimal(25,2)") * 100).cast("long").as("cents"),
+        graft.operators.Olap.units(col("value"), 2).as("cents"),
         col("ts"))
       .as[Ev]
     evs.groupByKey(_.user_id)
@@ -362,7 +361,7 @@ object StatefulSessions {
       .withWatermark("ts", "1 second")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
-        (col("value").cast("decimal(25,2)") * 100).cast("long").as("cents"),
+        graft.operators.Olap.units(col("value"), 2).as("cents"),
         col("ts"))
       .as[Ev]
     val sessions = evs.groupByKey(_.user_id)

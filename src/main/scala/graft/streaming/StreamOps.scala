@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.operators.Olap.dsum
+import graft.operators.Olap.{dsum, exactSum}
 import graft.sources.Tables
 
 /** SURVEY §2 B14: Structured Streaming analogue of the reference's stream-out
@@ -485,9 +485,9 @@ object StreamOps {
   private[graft] def streamKnScoreImpl(rootSpark: SparkSession, dir: String,
       literalMax: Long): DataFrame = {
     val spark = streamingSession(rootSpark)
-    val t = graft.operators.CorpusOps.knTrainTablesOn(
-      Tables(spark, dir).documents, "doc_id", "text")
-    val docs = Tables(spark, dir).stream("documents")
+    val documents = Tables(spark, dir).documents
+    val t = graft.operators.CorpusOps.knTrainTablesOn(documents, "doc_id", "text")
+    val docs = Tables(spark, dir).stream("documents", schema = Some(documents.schema))
     if (t.dTypes <= literalMax) {
       // literal-path scoring is stateless append over O(docs) output rows —
       // corpus-sized, so it drains through the parquet sink like the join
@@ -737,10 +737,10 @@ object StreamOps {
     * corpus the drain EQUALS the batch C78 and shares its oracle. */
   def streamNbScore(rootSpark: SparkSession, dir: String): DataFrame = {
     val spark = streamingSession(rootSpark)
+    val documents = Tables(spark, dir).documents
     val model = graft.operators.Pipeline.nbTrain(
-      graft.operators.Pipeline.nbFrameOf(
-        Tables(spark, dir).documents, "doc_id", "text"))
-    val docs = Tables(spark, dir).stream("documents")
+      graft.operators.Pipeline.nbFrameOf(documents, "doc_id", "text"))
+    val docs = Tables(spark, dir).stream("documents", schema = Some(documents.schema))
     drainViaParquetSink(spark, docs, NbScoreQueryName,
       xform = (mb, _) => graft.operators.Pipeline.nbScore(model,
         graft.operators.Pipeline.nbFrameOf(mb, "doc_id", "text")))
@@ -964,10 +964,10 @@ object StreamOps {
   def streamEmbedPca(rootSpark: SparkSession, dir: String): DataFrame = {
     import graft.operators.VectorOps
     val spark = streamingSession(rootSpark)
-    val v = VectorOps.embedPcaAxis(
-      Tables(spark, dir).embeddings, "vec_id", "embedding",
+    val embeddings = Tables(spark, dir).embeddings
+    val v = VectorOps.embedPcaAxis(embeddings, "vec_id", "embedding",
       VectorOps.PcaDim)
-    val e = Tables(spark, dir).stream("embeddings")
+    val e = Tables(spark, dir).stream("embeddings", schema = Some(embeddings.schema))
     val agg = VectorOps.embedPcaProjectWith(v, e, "vec_id", "embedding")
       .groupBy(floor(col("pc1") * 10).cast("int").as("p_bucket"))
       .agg(count(lit(1)).as("n_vectors"))
@@ -1150,8 +1150,8 @@ object StreamOps {
           .as("last_d"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("frequency"),
-        sum(when(col("event_type") === "purchase",
-          col("value").cast("decimal(25,6)"))).as("monetary_dec"))
+        exactSum(when(col("event_type") === "purchase",
+          col("value")), 6).as("monetary_dec"))
     drainViaParquetSink(spark, perUser.toDF(), RfmQueryName,
       complete = true,
       xform = (mb, _) => {
@@ -1738,7 +1738,7 @@ object StreamOps {
     val daily = ev.withWatermark("ts", "1 second")
       .groupBy(col("event_type").as("grp"),
         window(col("ts"), "1 day").as("w"))
-      .agg(sum(col("value").cast("decimal(25,6)")).as("v"))
+      .agg(exactSum(col("value"), 6).as("v"))
       .select(col("grp"), col("w.start").as("d_ts"), col("v"))
     drainViaParquetSink(spark, daily.toDF(), queryName,
       xform = (mb, _) => mb.filter(col("grp") =!= "_sentinel"),

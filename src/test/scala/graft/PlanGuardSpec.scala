@@ -364,4 +364,33 @@ class PlanGuardSpec extends SparkSpec {
     finally walk.close()
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("only Olap spells an exact sum: no sum over a DECIMAL(25,s) cast elsewhere") {
+    // Olap.exactSum gives sum(e.cast("decimal(25,s)"))'s value and type
+    // without a BigDecimal per row; a hand-written copy would bring it back
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val offenders = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(java.nio.file.Paths.get("graft/operators/Olap.scala")))
+      .flatMap { p =>
+        val code = java.nio.file.Files.readAllLines(p).asScala
+          .map(_.replaceAll("^\\s*(\\*|/\\*\\*?|//).*", "").replaceAll("//.*", ""))
+          .mkString("\n")
+        """\bsum\(""".r.findAllMatchIn(code).flatMap { m =>
+          // the argument list: up to the parenthesis that closes sum(
+          val args = code.iterator.drop(m.end).scanLeft(1) {
+            case (depth, '(') => depth + 1
+            case (depth, ')') => depth - 1
+            case (depth, _) => depth
+          }.drop(1).takeWhile(_ > 0).size
+          val line = code.substring(0, m.start).count(_ == '\n') + 1
+          if (code.substring(m.end, m.end + args).contains(".cast(\"decimal(25,"))
+            Some(s"$p:$line")
+          else None
+        }
+      }.toList
+    finally walk.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
