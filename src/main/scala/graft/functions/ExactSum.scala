@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 /** `sum(cast(child AS DECIMAL(25,scale)))` — its DECIMAL(35,scale) value
-  * and type, nulls and errors — without a BigDecimal per row.
+  * and type, nulls and errors — without a BigDecimal per row in a
+  * grouped sum (a window sum recombines, in decimal, per output row).
   *
   * Each row becomes U, its count of 10^-scale units ([[ExactSum.kernel]]).
   * The 21-bit limbs of `hi = floor(U / 2^42)` and `lo = U mod 2^42` are

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 import graft.functions.ExactSum
 import graft.sources.Tables
@@ -27,12 +26,10 @@ object Olap {
     exactSum(e, scale).cast("double")
 
   /** `sum(e.cast("decimal(25,scale)"))` — its DECIMAL(35,scale) value and
-    * type, nulls and errors — without a BigDecimal per row
-    * ([[graft.functions.ExactSum]]); `over` makes it a window sum. */
-  def exactSum(e: Column, scale: Int, over: Option[WindowSpec] = None): Column = {
-    val s = column(ExactSum(expression(e), scale).toAggregateExpression())
-    over.fold(s)(s.over(_))
-  }
+    * type, nulls and errors — without a BigDecimal per row in a grouped
+    * sum ([[graft.functions.ExactSum]]). */
+  def exactSum(e: Column, scale: Int): Column =
+    column(ExactSum(expression(e), scale).toAggregateExpression())
 
   /** Row `e` as a LONG count of 10^-scale units: the value, nulls and errors
     * of `CAST(CAST(e AS DECIMAL(25,scale)) * 10^scale AS BIGINT)`, the

@@ -122,7 +122,7 @@ object OlapB {
     // Running sums are exact (Olap.exactSum) within a deterministic row
     // order, so they are bit-identical across engines and partitionings.
     def rsum(w: org.apache.spark.sql.expressions.WindowSpec): Column =
-      Olap.exactSum(col("o_totalprice"), 2, Some(w)).cast("double")
+      Olap.exactSum(col("o_totalprice"), 2).over(w).cast("double")
     Tables(spark, dir).orders
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
         rsum(wRun).as("running_spend"), rsum(wMov).as("last3_spend"))

@@ -930,7 +930,7 @@ object OlapC {
         col(idCol).as("event_id"), col(valCol).as("value"))
       .select(col("event_id"), col("user_id"), col("ts_us"),
         count(lit(1)).over(w).as("n_1h"),
-        Olap.exactSum(col("value"), 2, Some(w)).cast("double")
+        Olap.exactSum(col("value"), 2).over(w).cast("double")
           .as("vsum_1h"))
       .orderBy(col("event_id"))
   }

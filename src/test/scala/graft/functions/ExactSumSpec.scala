@@ -151,7 +151,7 @@ class ExactSumSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .orderBy(col("g")).collect().toSeq.map(_.get(1)))
     val w = Window.partitionBy(col("g")).orderBy(col("i")).rowsBetween(-2, Window.currentRow)
     def windowed(n: Int) = df.repartition(n).select(col("i"),
-      Olap.exactSum(col("v"), 2, Some(w)).as("new"), oldSum(col("v"), 2).over(w).as("old"))
+      Olap.exactSum(col("v"), 2).over(w).as("new"), oldSum(col("v"), 2).over(w).as("old"))
       .orderBy(col("i")).collect().toSeq
     val w1 = windowed(1)
     assert(w1.forall(r => r.get(1) == r.get(2)))
